@@ -430,8 +430,10 @@ def main() -> None:
             # which core count produced this artifact — the scaling run and
             # the main run used to overwrite ONE detail file (r20 lost its
             # 32-core per-query map to the 8-core run); cpus is recorded
-            # here and keyed into the per-cpus detail filename below
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            # here and keyed into the per-cpus detail filename below.  It is
+            # read from the live session, not re-derived from the env, so
+            # the label names the parallelism the timings really ran at
+            "cpus": spark.sparkContext.defaultParallelism,
             # the wall budget this run degraded against, and which lines it
             # degraded — tools/bench_medians.py REFUSES detail files whose
             # tail degraded (the r12/r17 fabricated-movers artifact) unless

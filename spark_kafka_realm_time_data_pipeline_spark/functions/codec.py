@@ -101,15 +101,6 @@ def parse_stedi_events(df: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-def risk_join(risk: DataFrame, customers: DataFrame) -> DataFrame:
-    """The flagship stream-stream inner equi-join (sparkpykafkajoin.py:184-187)
-    re-expressed: ``customer = email``.  In batch Catalyst picks
-    broadcast-hash when the dim side is small; in streaming the watermarked
-    variant (streaming/pipeline.py) bounds state — fixing reference defect
-    (b) in SURVEY.md §2.6."""
-    return risk.join(customers, F.expr("customer = email"))
-
-
 def serialize_risk_output(df: DataFrame) -> DataFrame:
     """Kafka sink projection (sparkpykafkajoin.py:202): key=email,
     value=JSON{customer, score, email, birthYear}."""

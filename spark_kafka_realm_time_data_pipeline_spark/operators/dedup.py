@@ -595,18 +595,6 @@ def simhash_near_dup_pairs(corpus: DataFrame, bits: int = 16) -> DataFrame:
     )
 
 
-def simhash_dup_groups(corpus: DataFrame) -> DataFrame:
-    """Block on exact simhash equality (hamming 0): the scalable first tier
-    of simhash dedup (wider hamming radii probe bit-flip variants of the
-    same blocking key — still equi-joins, not cross products)."""
-    fp = simhash_fingerprints(corpus)
-    return (
-        fp.groupBy("simhash")
-        .agg(F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def dup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, component_id)
     with component_id = min doc_id in the component — the step that turns

@@ -10,10 +10,12 @@ path round-trips every payload through a REAL 24-bit BMP container —
 ``encode_bmp`` (deterministic: pixel bytes cycle the payload bytes, so the
 oracle can replay the stats analytically) and ``decode_bmp`` (a genuine
 pure-Python parser: file/info headers via struct, bottom-up row order,
-4-byte row stride padding).  Swapping in a JPEG/PNG decoder changes one
-function; the Spark plumbing — schema, batch iteration, partitioning — is
-identical.  PNG decodes for real too — chunk walk + CRC32 validation +
-stdlib-zlib IDAT inflate + per-row filter reversal (Sub/Up/Average/Paeth).
+4-byte row stride padding).  Adding a format means one row function
+(payload -> stats tuple) plus one schema; the Spark plumbing — typed
+batch building, batch iteration, partitioning — is shared by every format
+(``_feature_batch`` / ``extract_features``).  PNG decodes for real too —
+chunk walk + CRC32 validation + stdlib-zlib IDAT inflate + per-row filter
+reversal (Sub/Up/Average/Paeth).
 Baseline-grayscale JPEG decodes for real as well — marker/DQT/DHT parse,
 canonical Huffman rebuild, differential DC + run-length AC entropy
 decode, dequantize, dezigzag, and an 8x8 orthonormal IDCT (numpy).
@@ -1516,32 +1518,6 @@ def decode_image(payload: bytes) -> tuple[int, int, bytes]:
     )
 
 
-def _bmp_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a real BMP, decode it back with the real
-    parser, and emit decoded pixel statistics.  The encode leg stands in
-    for 'the corpus already stores images'; the decode leg is the actual
-    work a feature-extraction pass does at scale."""
-    import pandas as pd
-
-    out = {"doc_id": [], "width": [], "height": [], "n_pixels": [], "pixel_sum": []}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        width, height, raster = decode_image(encode_bmp(payload or b""))
-        out["doc_id"].append(doc_id)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_pixels"].append(width * height)
-        out["pixel_sum"].append(int(sum(raster)))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "n_pixels": pd.Series(out["n_pixels"], dtype="int32"),
-            "pixel_sum": pd.Series(out["pixel_sum"], dtype="int64"),
-        }
-    )
-
-
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes int, frame_checksum long"
 FRAME_SIZE = 32  # bytes per fake "frame"
 FRAME_STRIDE = 4  # sample every 4th frame
@@ -1622,11 +1598,64 @@ def resize_payloads(binary_docs: DataFrame) -> DataFrame:
     return _map_payload_batches(binary_docs, _fake_resize_batch, RESIZE_SCHEMA)
 
 
-def extract_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column: a real BMP
-    container round-trip per payload (see _bmp_feature_batch); swap the
-    decoder for JPEG/PNG and the plan is unchanged."""
-    return _map_payload_batches(binary_docs, _bmp_feature_batch, FEATURE_SCHEMA)
+# --- Feature extraction: one batch builder, one row function per format -----
+#
+# Each row function calls its encoder and decoder by name, and query
+# functions pass it to extract_features by name — never through a dict or
+# tuple of functions: tools/closure_fp.py does not walk those, so a codec
+# edit would no longer flip the query's proof fingerprint.
+
+
+def _feature_batch(pdf: "pd.DataFrame", schema: str, row_fn) -> "pd.DataFrame":
+    """Run ``row_fn`` over one Arrow batch and build the typed frame
+    ``schema`` declares: doc_id, then one column per value of the row
+    function's stats tuple.  A null payload decodes as ``b""``.  Pandas
+    dtypes come from the DDL types, so an empty batch is typed too."""
+    import pandas as pd
+
+    dtypes = {"long": "int64", "int": "int32", "string": "object"}
+    cols = [col.split() for col in schema.split(",")]
+    rows = [row_fn(payload or b"") for payload in pdf["payload"]]
+    values = [pdf["doc_id"].tolist()] + (list(zip(*rows)) or [()] * (len(cols) - 1))
+    return pd.DataFrame(
+        {
+            name: pd.Series(vals, dtype=dtypes[ddl_type])
+            for (name, ddl_type), vals in zip(cols, values, strict=True)
+        }
+    )
+
+
+def extract_features(binary_docs: DataFrame, row_fn, schema: str) -> DataFrame:
+    """Arrow-batched feature extraction over the binary column: a real
+    codec round-trip per payload through ``row_fn``.  Swapping the format
+    swaps the row function and schema; the plan is unchanged."""
+    return _map_payload_batches(
+        binary_docs, lambda pdf: _feature_batch(pdf, schema, row_fn), schema
+    )
+
+
+def _byte_sum(raster: bytes) -> int:
+    """Sum of a decoded raster's bytes (the grayscale pixel sum, or all
+    three channels of an RGB raster)."""
+    return sum(raster)
+
+
+def _rgb_sums(rgb: bytes, width: int, height: int) -> tuple[int, int, int]:
+    """Per-channel sums of an interleaved RGB raster; the reshape checks
+    that the decoder returned exactly width x height x 3 bytes."""
+    import numpy as np
+
+    arr = np.frombuffer(rgb, np.uint8).reshape(height, width, 3).astype(np.int64)
+    return int(arr[..., 0].sum()), int(arr[..., 1].sum()), int(arr[..., 2].sum())
+
+
+def _bmp_row(payload: bytes) -> tuple:
+    """FEATURE_SCHEMA row: encode the payload into a real BMP and decode it
+    back with the real parser.  The encode leg stands in for 'the corpus
+    already stores images'; the decode leg is the actual work a
+    feature-extraction pass does at scale."""
+    width, height, raster = decode_image(encode_bmp(payload))
+    return width, height, width * height, _byte_sum(raster)
 
 
 # --- WAV (RIFF / 16-bit PCM) codec -------------------------------------------
@@ -1697,334 +1726,130 @@ def decode_audio(payload: bytes) -> tuple[int, "object"]:
     )
 
 
-def _wav_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a real WAV, decode it back with the real
-    RIFF parser, and emit decoded waveform statistics — the audio analog
-    of _bmp_feature_batch."""
-    import pandas as pd
-
-    out = {"doc_id": [], "n_samples": [], "sample_rate": [], "amp_sum": [], "peak": []}
+def _wav_row(payload: bytes) -> tuple:
+    """AUDIO_SCHEMA row: encode the payload into a real WAV and decode it
+    back with the real RIFF parser — the audio analog of _bmp_row; an
+    MP3/AAC decoder would slot in here with the plan unchanged."""
     import numpy as np
 
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        rate, samples = decode_audio(encode_wav(payload or b""))
-        amps = np.abs(np.asarray(samples, dtype=np.int64))
-        out["doc_id"].append(doc_id)
-        out["n_samples"].append(len(samples))
-        out["sample_rate"].append(rate)
-        out["amp_sum"].append(int(amps.sum()))
-        out["peak"].append(int(amps.max()) if len(amps) else 0)
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "n_samples": pd.Series(out["n_samples"], dtype="int32"),
-            "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-            "amp_sum": pd.Series(out["amp_sum"], dtype="int64"),
-            "peak": pd.Series(out["peak"], dtype="int32"),
-        }
-    )
+    rate, samples = decode_audio(encode_wav(payload))
+    amps = np.abs(np.asarray(samples, dtype=np.int64))
+    return len(samples), rate, int(amps.sum()), int(amps.max()) if len(amps) else 0
 
 
-def extract_audio_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched audio feature extraction: a real WAV container
-    round-trip per payload; swap the decoder for MP3/AAC and the plan is
-    unchanged."""
-    return _map_payload_batches(binary_docs, _wav_feature_batch, AUDIO_SCHEMA)
-
-
-def _png_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a real PNG and decode it back with the
-    real parser — CRC-checked chunk walk, zlib inflate, five-filter
-    scanline reversal — then emit decoded pixel statistics.  The PNG
-    analog of _bmp_feature_batch (grayscale: 1 byte/pixel)."""
-    import pandas as pd
-
-    out = {"doc_id": [], "width": [], "height": [], "n_pixels": [], "pixel_sum": []}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        width, height, raster = decode_image(encode_png(payload or b""))
-        out["doc_id"].append(doc_id)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_pixels"].append(width * height)
-        out["pixel_sum"].append(int(sum(raster)))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "n_pixels": pd.Series(out["n_pixels"], dtype="int32"),
-            "pixel_sum": pd.Series(out["pixel_sum"], dtype="int64"),
-        }
-    )
-
-
-def extract_png_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched PNG feature extraction: a real compressed-container
-    round-trip per payload (deflate on encode, inflate + filter reversal
-    on decode) — the closest this sandbox gets to production image decode
-    without an imaging library."""
-    return _map_payload_batches(binary_docs, _png_feature_batch, FEATURE_SCHEMA)
-
-
-def _jpeg_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a real baseline JFIF JPEG and decode it
-    back with the full baseline decoder — marker walk, Huffman decode,
-    differential DC, dequantize, dezigzag, 8x8 IDCT — then emit decoded
-    pixel statistics.  The transform-codec analog of _png_feature_batch
+def _png_row(payload: bytes) -> tuple:
+    """FEATURE_SCHEMA row: encode the payload into a real PNG (deflate on
+    encode) and decode it back with the real parser — CRC-checked chunk
+    walk, zlib inflate, five-filter scanline reversal.  The closest this
+    package gets to production image decode without an imaging library
     (grayscale: 1 byte/pixel)."""
-    import pandas as pd
-
-    out = {"doc_id": [], "width": [], "height": [], "n_pixels": [], "pixel_sum": []}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        width, height, raster = decode_image(encode_jpeg(payload or b""))
-        out["doc_id"].append(doc_id)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_pixels"].append(width * height)
-        out["pixel_sum"].append(int(sum(raster)))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "n_pixels": pd.Series(out["n_pixels"], dtype="int32"),
-            "pixel_sum": pd.Series(out["pixel_sum"], dtype="int64"),
-        }
-    )
+    width, height, raster = decode_image(encode_png(payload))
+    return width, height, width * height, _byte_sum(raster)
 
 
-def extract_jpeg_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched JPEG feature extraction: a real transform-coded
-    container round-trip per payload (Huffman entropy coding on both
-    legs, IDCT on decode).  The decoder is a complete baseline-grayscale
-    implementation; only the encoder restricts itself to DC-only blocks
-    so the round trip stays bit-exact and oracle-replayable."""
-    return _map_payload_batches(binary_docs, _jpeg_feature_batch, FEATURE_SCHEMA)
+def _jpeg_row(payload: bytes) -> tuple:
+    """FEATURE_SCHEMA row: encode the payload into a real baseline JFIF
+    JPEG and decode it back with the full baseline decoder — marker walk,
+    Huffman decode, differential DC, dequantize, dezigzag, 8x8 IDCT
+    (grayscale: 1 byte/pixel).  The decoder is a complete
+    baseline-grayscale implementation; only the encoder restricts itself
+    to DC-only blocks, so the round trip stays bit-exact and
+    oracle-replayable."""
+    width, height, raster = decode_image(encode_jpeg(payload))
+    return width, height, width * height, _byte_sum(raster)
 
 
-COLOR_FEATURE_SCHEMA = (
+COLOR_SCHEMA = (
     "doc_id long, width int, height int, n_pixels int, "
     "r_sum long, g_sum long, b_sum long"
 )
 
 
-def _jpeg_color_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a real 4:2:0 color JPEG, run the full
-    interleaved-MCU color decode (Huffman, per-component DC predictors,
-    chroma upsample, fixed-point YCbCr->RGB), and emit per-channel pixel
-    sums — the color analog of _jpeg_feature_batch."""
-    import numpy as np
-    import pandas as pd
-
-    out = {k: [] for k in
-           ("doc_id", "width", "height", "n_pixels", "r_sum", "g_sum", "b_sum")}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        width, height, rgb = decode_jpeg_color(encode_jpeg_color(payload or b""))
-        arr = np.frombuffer(rgb, np.uint8).reshape(height, width, 3).astype(np.int64)
-        out["doc_id"].append(doc_id)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_pixels"].append(width * height)
-        out["r_sum"].append(int(arr[..., 0].sum()))
-        out["g_sum"].append(int(arr[..., 1].sum()))
-        out["b_sum"].append(int(arr[..., 2].sum()))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "n_pixels": pd.Series(out["n_pixels"], dtype="int32"),
-            "r_sum": pd.Series(out["r_sum"], dtype="int64"),
-            "g_sum": pd.Series(out["g_sum"], dtype="int64"),
-            "b_sum": pd.Series(out["b_sum"], dtype="int64"),
-        }
-    )
+def _jpeg_color_row(payload: bytes) -> tuple:
+    """COLOR_SCHEMA row: encode the payload into a real 4:2:0 color JPEG
+    and run the full interleaved-MCU color decode (Huffman, per-component
+    DC predictors, chroma upsample, fixed-point YCbCr->RGB).  The color
+    conversion is integer-exact, so the per-channel sums are
+    oracle-replayable."""
+    width, height, rgb = decode_jpeg_color(encode_jpeg_color(payload))
+    return width, height, width * height, *_rgb_sums(rgb, width, height)
 
 
-def extract_jpeg_color_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched COLOR JPEG feature extraction: 4:2:0 three-component
-    round-trip per payload with integer-exact color conversion, so the
-    per-channel sums are oracle-replayable."""
-    return _map_payload_batches(
-        binary_docs, _jpeg_color_feature_batch, COLOR_FEATURE_SCHEMA
-    )
+def _decode_sof2(stream: bytes) -> tuple[int, int, bytes, int]:
+    """Route an encoded progressive stream through the same SOF peek
+    decode_image uses (_jpeg_mode), then decode it with the multi-scan
+    decoder, which also counts the scans it consumed."""
+    progressive, _ncomp = _jpeg_mode(stream)
+    if not progressive:
+        raise ValueError("encoder emitted a non-SOF2 stream")
+    return decode_jpeg_progressive_counted(stream)
 
 
-PROG_FEATURE_SCHEMA = (
-    "doc_id long, width int, height int, n_scans int, pixel_sum long"
-)
+PROG_SCHEMA = "doc_id long, width int, height int, n_scans int, pixel_sum long"
 
 
-def _jpeg_progressive_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a progressive (SOF2) grayscale JPEG —
-    DC first + DC refine + one or two spectral AC band scans — route it
-    through the same SOF peek decode_image uses (_jpeg_mode), and decode
-    with the multi-scan progressive decoder.  Pixels are identical to the
-    baseline encode of the same payload by construction, so the oracle
+def _jpeg_progressive_row(payload: bytes) -> tuple:
+    """PROG_SCHEMA row: encode the payload into a progressive (SOF2)
+    grayscale JPEG — DC first + DC refine + one or two spectral AC band
+    scans — and decode it through _decode_sof2.  Pixels are identical to
+    the baseline encode of the same payload by construction, so the oracle
     replays pixel_sum analytically and any successive-approximation,
     EOBRUN, or scan-sequencing bug mis-sums.  n_scans is COUNTED from the
-    scans the decoder consumed (r16, per ADVICE) — the oracle replays the
-    encoder's spectral split analytically, so the two routes are
-    independent and a sequencing bug surfaces through the column."""
-    import numpy as np
-    import pandas as pd
-
-    out = {k: [] for k in ("doc_id", "width", "height", "n_scans", "pixel_sum")}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        payload = payload or b""
-        stream = encode_jpeg_progressive(payload)
-        progressive, _ncomp = _jpeg_mode(stream)  # decode_image's routing peek
-        if not progressive:
-            raise ValueError("encoder emitted a non-SOF2 stream")
-        width, height, raster, n_scans = decode_jpeg_progressive_counted(stream)
-        out["doc_id"].append(doc_id)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_scans"].append(n_scans)
-        out["pixel_sum"].append(int(np.frombuffer(raster, np.uint8).sum()))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "n_scans": pd.Series(out["n_scans"], dtype="int32"),
-            "pixel_sum": pd.Series(out["pixel_sum"], dtype="int64"),
-        }
-    )
+    scans the decoder consumed while the oracle replays the encoder's
+    spectral split analytically, so the two routes are independent and a
+    sequencing bug surfaces through the column."""
+    width, height, raster, n_scans = _decode_sof2(encode_jpeg_progressive(payload))
+    return width, height, n_scans, _byte_sum(raster)
 
 
-def extract_jpeg_progressive_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched PROGRESSIVE JPEG feature extraction: multi-scan SOF2
-    round-trip per payload (spectral selection + successive
-    approximation), decoded through the format-routing entry point."""
-    return _map_payload_batches(
-        binary_docs, _jpeg_progressive_feature_batch, PROG_FEATURE_SCHEMA
-    )
-
-
-PROG_COLOR_FEATURE_SCHEMA = (
+PROG_COLOR_SCHEMA = (
     "doc_id long, width int, height int, n_scans int, "
     "r_sum long, g_sum long, b_sum long"
 )
 
 
-def _jpeg_progressive_color_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a progressive 4:2:0 COLOR JPEG —
-    interleaved DC first/refine scans plus per-component AC band scans —
-    route it through the same SOF peek decode_image uses, and decode with
-    the multi-scan progressive decoder.  Pixels equal the baseline color
-    encode by construction, so the oracle replays the fixed-point
-    per-channel sums analytically; n_scans is COUNTED from the scans the
-    decoder consumed (r16, per ADVICE) while the oracle replays the
-    encoder's spectral split, so a per-component predictor mixup,
-    scan-sequencing, or upsample bug mis-sums or mis-counts."""
-    import numpy as np
-    import pandas as pd
-
-    out = {k: [] for k in (
-        "doc_id", "width", "height", "n_scans", "r_sum", "g_sum", "b_sum",
-    )}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        payload = payload or b""
-        stream = encode_jpeg_progressive_color(payload)
-        progressive, _ncomp = _jpeg_mode(stream)  # decode_image's routing peek
-        if not progressive:
-            raise ValueError("encoder emitted a non-SOF2 stream")
-        width, height, rgb, n_scans = decode_jpeg_progressive_counted(stream)
-        arr = np.frombuffer(rgb, np.uint8).reshape(height, width, 3).astype(np.int64)
-        out["doc_id"].append(doc_id)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_scans"].append(n_scans)
-        out["r_sum"].append(int(arr[..., 0].sum()))
-        out["g_sum"].append(int(arr[..., 1].sum()))
-        out["b_sum"].append(int(arr[..., 2].sum()))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "n_scans": pd.Series(out["n_scans"], dtype="int32"),
-            "r_sum": pd.Series(out["r_sum"], dtype="int64"),
-            "g_sum": pd.Series(out["g_sum"], dtype="int64"),
-            "b_sum": pd.Series(out["b_sum"], dtype="int64"),
-        }
-    )
+def _jpeg_progressive_color_row(payload: bytes) -> tuple:
+    """PROG_COLOR_SCHEMA row: encode the payload into a progressive 4:2:0
+    COLOR JPEG — interleaved DC first/refine scans plus per-component AC
+    band scans, the web's dominant JPEG shape — and decode it through
+    _decode_sof2.  Pixels equal the baseline color encode by construction,
+    so the oracle replays the fixed-point per-channel sums analytically;
+    n_scans is COUNTED from the scans the decoder consumed while the
+    oracle replays the encoder's spectral split, so a per-component
+    predictor mixup, scan-sequencing, or upsample bug mis-sums or
+    mis-counts."""
+    width, height, rgb, n_scans = _decode_sof2(encode_jpeg_progressive_color(payload))
+    return width, height, n_scans, *_rgb_sums(rgb, width, height)
 
 
-def extract_jpeg_progressive_color_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched PROGRESSIVE COLOR JPEG extraction: multi-scan SOF2
-    4:2:0 round-trip per payload, the web's dominant JPEG shape."""
-    return _map_payload_batches(
-        binary_docs,
-        _jpeg_progressive_color_feature_batch,
-        PROG_COLOR_FEATURE_SCHEMA,
-    )
-
-
-DRI_FEATURE_SCHEMA = (
+DRI_SCHEMA = (
     "doc_id long, width int, height int, restart_interval int, "
     "n_restarts int, r_sum long, g_sum long, b_sum long"
 )
 
 
-def _jpeg_dri_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a 4:2:0 color JPEG WITH restart markers
-    (interval 1 + n % 2, so every multi-MCU image carries RSTm markers
-    and per-interval predictor resets), run the full color decode, and
-    emit per-channel sums plus the restart geometry.  The decode only
-    succeeds if every RSTm is consumed at the right MCU with the right
-    modulo-8 index — a desynced reader hits 'marker inside entropy data'
-    or a wrong-index raise, so the value match proves the restart path,
-    not just the pixel math."""
-    import numpy as np
-    import pandas as pd
-
-    out = {k: [] for k in (
-        "doc_id", "width", "height", "restart_interval", "n_restarts",
-        "r_sum", "g_sum", "b_sum",
-    )}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        payload = payload or b""
-        interval = 1 + len(payload) % 2
-        width, height, rgb = decode_jpeg_color(
-            encode_jpeg_color(payload, restart_interval=interval)
-        )
-        arr = np.frombuffer(rgb, np.uint8).reshape(height, width, 3).astype(np.int64)
-        mcus = (width // 16) * (height // 16)
-        out["doc_id"].append(doc_id)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["restart_interval"].append(interval)
-        out["n_restarts"].append((mcus - 1) // interval)
-        out["r_sum"].append(int(arr[..., 0].sum()))
-        out["g_sum"].append(int(arr[..., 1].sum()))
-        out["b_sum"].append(int(arr[..., 2].sum()))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "restart_interval": pd.Series(out["restart_interval"], dtype="int32"),
-            "n_restarts": pd.Series(out["n_restarts"], dtype="int32"),
-            "r_sum": pd.Series(out["r_sum"], dtype="int64"),
-            "g_sum": pd.Series(out["g_sum"], dtype="int64"),
-            "b_sum": pd.Series(out["b_sum"], dtype="int64"),
-        }
+def _jpeg_dri_row(payload: bytes) -> tuple:
+    """DRI_SCHEMA row: encode the payload into a 4:2:0 color JPEG WITH
+    restart markers (interval 1 + n % 2, so every multi-MCU image carries
+    RSTm markers and per-interval predictor resets — the error-resilience
+    shape most real-world camera/libjpeg output carries), run the full
+    color decode, and emit per-channel sums plus the restart geometry.
+    The decode only succeeds if every RSTm is consumed at the right MCU
+    with the right modulo-8 index — a desynced reader hits 'marker inside
+    entropy data' or a wrong-index raise, so the value match proves the
+    restart path, not just the pixel math."""
+    interval = 1 + len(payload) % 2
+    width, height, rgb = decode_jpeg_color(
+        encode_jpeg_color(payload, restart_interval=interval)
+    )
+    mcus = (width // 16) * (height // 16)
+    return (
+        width, height, interval, (mcus - 1) // interval,
+        *_rgb_sums(rgb, width, height),
     )
 
 
-def extract_jpeg_dri_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched restart-marker COLOR JPEG extraction: the 4:2:0
-    round-trip of extract_jpeg_color_features, but through a bitstream
-    segmented by DRI/RSTm restart intervals — the error-resilience shape
-    most real-world camera/libjpeg output carries."""
-    return _map_payload_batches(
-        binary_docs, _jpeg_dri_feature_batch, DRI_FEATURE_SCHEMA
-    )
-
-
-SAMPLING_FEATURE_SCHEMA = (
+SAMPLING_SCHEMA = (
     "doc_id long, sampling string, width int, height int, n_pixels int, "
     "r_sum long, g_sum long, b_sum long"
 )
@@ -2038,56 +1863,17 @@ _JPEG_SAMPLING_CYCLE = (
 )
 
 
-def _jpeg_sampling_feature_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Encode each payload into a baseline color JPEG at a NON-4:2:0
-    sampling layout — 4:2:2 (Y 2x1), 4:4:0 (Y 1x2), or 4:4:4 (all 1x1),
-    cycled by payload length — and run the sampling-general color decode
-    (per-layout MCU geometry, data-unit raster order, per-axis chroma
-    upsample).  Within MCU m, Y data unit j carries the cycled byte
-    ``data[(nY*m + j) % n]`` and the MCU's chroma is ``data[m % n]`` /
-    ``data[(m+1) % n]``, so the oracle replays the per-channel sums with
-    the same exact-BIGINT fixed-point replay as the 4:2:0 query, with nY
-    and the plane geometry parametrized by the layout."""
-    import numpy as np
-    import pandas as pd
-
-    out = {k: [] for k in (
-        "doc_id", "sampling", "width", "height", "n_pixels",
-        "r_sum", "g_sum", "b_sum",
-    )}
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        payload = payload or b""
-        name, layout = _JPEG_SAMPLING_CYCLE[(len(payload) // 3) % 3]
-        width, height, rgb = decode_jpeg_color(
-            encode_jpeg_color(payload, sampling=layout)
-        )
-        arr = np.frombuffer(rgb, np.uint8).reshape(height, width, 3).astype(np.int64)
-        out["doc_id"].append(doc_id)
-        out["sampling"].append(name)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_pixels"].append(width * height)
-        out["r_sum"].append(int(arr[..., 0].sum()))
-        out["g_sum"].append(int(arr[..., 1].sum()))
-        out["b_sum"].append(int(arr[..., 2].sum()))
-    return pd.DataFrame(
-        {
-            "doc_id": out["doc_id"],
-            "sampling": out["sampling"],
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "n_pixels": pd.Series(out["n_pixels"], dtype="int32"),
-            "r_sum": pd.Series(out["r_sum"], dtype="int64"),
-            "g_sum": pd.Series(out["g_sum"], dtype="int64"),
-            "b_sum": pd.Series(out["b_sum"], dtype="int64"),
-        }
-    )
-
-
-def extract_jpeg_sampling_features(binary_docs: DataFrame) -> DataFrame:
-    """Arrow-batched NON-4:2:0 COLOR JPEG extraction: baseline color
-    round-trips at the 4:2:2 / 4:4:0 / 4:4:4 layouts (cycled per doc),
-    exercising the sampling-general MCU geometry end-to-end."""
-    return _map_payload_batches(
-        binary_docs, _jpeg_sampling_feature_batch, SAMPLING_FEATURE_SCHEMA
-    )
+def _jpeg_sampling_row(payload: bytes) -> tuple:
+    """SAMPLING_SCHEMA row: encode the payload into a baseline color JPEG
+    at a NON-4:2:0 sampling layout — 4:2:2 (Y 2x1), 4:4:0 (Y 1x2), or
+    4:4:4 (all 1x1), cycled by payload length — and run the
+    sampling-general color decode (per-layout MCU geometry, data-unit
+    raster order, per-axis chroma upsample).  Within MCU m, Y data unit j
+    carries the cycled byte ``data[(nY*m + j) % n]`` and the MCU's chroma
+    is ``data[m % n]`` / ``data[(m+1) % n]``, so the oracle replays the
+    per-channel sums with the same exact-BIGINT fixed-point replay as the
+    4:2:0 query, with nY and the plane geometry parametrized by the
+    layout."""
+    name, layout = _JPEG_SAMPLING_CYCLE[(len(payload) // 3) % 3]
+    width, height, rgb = decode_jpeg_color(encode_jpeg_color(payload, sampling=layout))
+    return name, width, height, width * height, *_rgb_sums(rgb, width, height)

@@ -3650,7 +3650,8 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats; the oracle replays them analytically (pixel bytes cycle the
     text bytes, so pixel_sum = full_cycles * text_byte_sum + prefix_sum)
     without parsing BMP — two independent routes to the same numbers."""
-    return M.extract_features(M.with_binary_payload(load_table(spark, sf_dir, "documents")))
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._bmp_row, M.FEATURE_SCHEMA)
 
 
 # Corpus text is ASCII (guarded by tests/test_corpus_assumptions.py), so
@@ -3698,9 +3699,8 @@ def q_multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text bytes: pixel_sum = full_cycles * text_byte_sum + prefix_sum,
     1 byte/pixel) without parsing PNG — two independent routes to the
     same numbers, so a filter-reversal bug cannot pass."""
-    return M.extract_png_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._png_row, M.FEATURE_SCHEMA)
 
 
 # Same analytic law as ORA_MULTIMODAL_FEATURES but grayscale (1 byte/pixel:
@@ -3744,9 +3744,8 @@ def q_multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytically: pixel_sum = 64 * cycled block-value sum.  Two
     independent routes to the same numbers — an entropy-decode or IDCT
     bug cannot pass."""
-    return M.extract_jpeg_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._jpeg_row, M.FEATURE_SCHEMA)
 
 
 # Same cycled-sum law as PNG/BMP, but cycling over the BLOCK index (total =
@@ -3785,9 +3784,8 @@ def q_multimodal_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadrant's (Y, Cb, Cr) come from cycled text bytes and each channel
     sum is 64 * the clamped fixed-point conversion.  A chroma predictor,
     upsample, or color-matrix bug cannot pass."""
-    return M.extract_jpeg_color_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._jpeg_color_row, M.COLOR_SCHEMA)
 
 
 # Replays the interleaved-MCU geometry and the fixed-point color conversion
@@ -3846,9 +3844,8 @@ def q_multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame
     approximation shift, EOBRUN, or scan-ordering bug cannot pass.
     Reference has no counterpart (ships no image handling); SURVEY.md §2
     multimodal rows."""
-    return M.extract_jpeg_progressive_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._jpeg_progressive_row, M.PROG_SCHEMA)
 
 
 # Same cycled-constant-block pixel law as ORA_MULTIMODAL_JPEG_STATS (the
@@ -3888,9 +3885,8 @@ def q_multimodal_jpeg_progressive_color(
     oracle replays the per-channel sums plus the spectral-split scan
     count analytically.  Reference has no counterpart; SURVEY.md §2
     multimodal rows."""
-    return M.extract_jpeg_progressive_color_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._jpeg_progressive_color_row, M.PROG_COLOR_SCHEMA)
 
 
 # Same per-channel replay as ORA_MULTIMODAL_JPEG_COLOR (the progressive
@@ -3946,9 +3942,8 @@ def q_multimodal_jpeg_dri(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bitstream, not the pixels), so the oracle replays the same
     fixed-point color conversion plus the restart geometry
     analytically."""
-    return M.extract_jpeg_dri_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._jpeg_dri_row, M.DRI_SCHEMA)
 
 
 # Same interleaved-MCU + fixed-point replay as ORA_MULTIMODAL_JPEG_COLOR;
@@ -4003,9 +3998,8 @@ def q_multimodal_jpeg_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry inlined — a raster-order, upsample-axis, or MCU-geometry
     bug on any layout cannot pass.  Reference has no counterpart (ships
     no image handling); SURVEY.md §2 multimodal rows."""
-    return M.extract_jpeg_sampling_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._jpeg_sampling_row, M.SAMPLING_SCHEMA)
 
 
 # Generalizes ORA_MULTIMODAL_JPEG_COLOR: the layout key (n // 3) % 3 picks
@@ -4094,9 +4088,8 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     — inside Arrow-batched mapInPandas.  Emits decoded waveform stats; the
     oracle replays them analytically (sample i is (byte_i - 128) * 256, so
     amp_sum = 256 * sum|ascii - 128|) without parsing RIFF."""
-    return M.extract_audio_features(
-        M.with_binary_payload(load_table(spark, sf_dir, "documents"))
-    )
+    docs = M.with_binary_payload(load_table(spark, sf_dir, "documents"))
+    return M.extract_features(docs, M._wav_row, M.AUDIO_SCHEMA)
 
 
 # Corpus text is ASCII (tests/test_corpus_assumptions.py), so ascii(char)
@@ -4136,10 +4129,14 @@ def q_multimodal_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import SHINGLE_B, SHINGLE_P
 
     docs = load_table(spark, sf_dir, "documents")
-    img = M.extract_features(M.with_binary_payload(docs)).select(
+    img = M.extract_features(
+        M.with_binary_payload(docs), M._bmp_row, M.FEATURE_SCHEMA
+    ).select(
         "doc_id", "width", "height", "pixel_sum"
     )
-    aud = M.extract_audio_features(M.with_binary_payload(docs)).select(
+    aud = M.extract_features(
+        M.with_binary_payload(docs), M._wav_row, M.AUDIO_SCHEMA
+    ).select(
         "doc_id", "amp_sum"
     )
     text = docs.select("doc_id", F.length("text").cast("bigint").alias("n_chars"))

@@ -61,19 +61,6 @@ def kafka_stream(spark: SparkSession, cfg: KafkaSourceConfig) -> DataFrame:
     return reader.load()
 
 
-def kafka_batch(spark: SparkSession, cfg: KafkaSourceConfig) -> DataFrame:
-    """Bounded Kafka scan (spark.read) — the batch analog the reference
-    lacks; useful for backfills over a topic's retained history."""
-    return (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", cfg.bootstrap_servers)
-        .option("subscribe", cfg.topic)
-        .option("startingOffsets", cfg.starting_offsets)
-        .option("endingOffsets", "latest")
-        .load()
-    )
-
-
 def cast_kv_string(df: DataFrame) -> DataFrame:
     """P1: the binary->string cast projection every reference script opens
     with (sparkpykafkajoin.py:57, :146)."""

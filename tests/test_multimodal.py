@@ -7,6 +7,8 @@ independent-writer tests decode files hand-packed byte-by-byte in the test
 
 import struct
 
+import pytest
+
 from spark_kafka_realm_time_data_pipeline_spark.operators.multimodal import (
     BMP_H_BASE,
     BMP_H_MOD,
@@ -1291,7 +1293,7 @@ def test_jpeg_sampling_feature_batch_matches_analytic_law():
     pdf = pd.DataFrame(
         {"doc_id": list(range(len(payloads))), "payload": payloads}
     )
-    got = M._jpeg_sampling_feature_batch(pdf)
+    got = M._feature_batch(pdf, M.SAMPLING_SCHEMA, M._jpeg_sampling_row)
     for i, payload in enumerate(payloads):
         n = len(payload)
         name, ((h1, v1), _, _) = M._JPEG_SAMPLING_CYCLE[(n // 3) % 3]
@@ -1311,3 +1313,80 @@ def test_jpeg_sampling_feature_batch_matches_analytic_law():
         assert (row["width"], row["height"]) == (8 * h1 * mw, 8 * v1 * mh)
         assert row["n_pixels"] == row["width"] * row["height"]
         assert (row["r_sum"], row["g_sum"], row["b_sum"]) == tuple(sums)
+
+
+# The nine feature queries: (registry name, row function, schema, encoder
+# the row function calls by name).
+FEATURE_QUERIES = [
+    ("multimodal_features", "_bmp_row", "FEATURE_SCHEMA", "encode_bmp"),
+    ("multimodal_png_stats", "_png_row", "FEATURE_SCHEMA", "encode_png"),
+    ("multimodal_jpeg_stats", "_jpeg_row", "FEATURE_SCHEMA", "encode_jpeg"),
+    ("multimodal_jpeg_color", "_jpeg_color_row", "COLOR_SCHEMA",
+     "encode_jpeg_color"),
+    ("multimodal_jpeg_progressive", "_jpeg_progressive_row", "PROG_SCHEMA",
+     "encode_jpeg_progressive"),
+    ("multimodal_jpeg_progressive_color", "_jpeg_progressive_color_row",
+     "PROG_COLOR_SCHEMA", "encode_jpeg_progressive_color"),
+    ("multimodal_jpeg_dri", "_jpeg_dri_row", "DRI_SCHEMA", "encode_jpeg_color"),
+    ("multimodal_jpeg_sampling", "_jpeg_sampling_row", "SAMPLING_SCHEMA",
+     "encode_jpeg_color"),
+    ("multimodal_audio", "_wav_row", "AUDIO_SCHEMA", "encode_wav"),
+]
+
+
+@pytest.mark.parametrize(
+    "row_name,schema_name", [(r, s) for _, r, s, _ in FEATURE_QUERIES]
+)
+def test_feature_batch_columns_and_dtypes_follow_the_ddl(row_name, schema_name):
+    """_feature_batch derives every column's pandas dtype from the Spark
+    DDL (long -> int64, int -> int32, string -> object), for an empty
+    batch as well as for null / empty payloads."""
+    import pandas as pd
+
+    from spark_kafka_realm_time_data_pipeline_spark.operators import (
+        multimodal as M,
+    )
+
+    schema, row_fn = getattr(M, schema_name), getattr(M, row_name)
+    ddl = [col.split() for col in schema.split(",")]
+    want_dtypes = {"long": "int64", "int": "int32", "string": "object"}
+    empty = pd.DataFrame(
+        {"doc_id": pd.Series([], dtype="int64"), "payload": pd.Series([], dtype=object)}
+    )
+    nullish = pd.DataFrame({"doc_id": [7, 8], "payload": [None, b""]})
+    for pdf in (empty, nullish):
+        got = M._feature_batch(pdf, schema, row_fn)
+        assert list(got.columns) == [name for name, _ in ddl]
+        assert [str(t) for t in got.dtypes] == [want_dtypes[t] for _, t in ddl]
+        assert len(got) == len(pdf)
+    # a null payload decodes exactly like an empty one
+    assert got.iloc[0].drop("doc_id").tolist() == got.iloc[1].drop("doc_id").tolist()
+    assert got["doc_id"].tolist() == [7, 8]
+
+
+@pytest.mark.parametrize(
+    "query,encoder", [(q, e) for q, _, _, e in FEATURE_QUERIES]
+)
+def test_encoder_swap_flips_feature_query_fingerprint(monkeypatch, query, encoder):
+    """The proof-freshness gate must see codec edits behind the shared
+    batch builder: the query reaches its row function by name, so
+    swapping that format's encoder on the module changes the query's
+    closure fingerprint.  A dict or tuple table of row functions would
+    hide the codec from tools/closure_fp.py and fail this test."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from closure_fp import closure_fingerprint
+
+    from spark_kafka_realm_time_data_pipeline_spark.operators import (
+        multimodal as M,
+    )
+    from spark_kafka_realm_time_data_pipeline_spark.queries import registry
+
+    spec = registry()[query]
+    before = closure_fingerprint(spec.fn, spec.oracle)
+    monkeypatch.setattr(M, encoder, lambda data, **kw: data)
+    assert closure_fingerprint(spec.fn, spec.oracle) != before

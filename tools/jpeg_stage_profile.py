@@ -7,9 +7,10 @@ own ratio, closing the loop on the "Arrow-batched and amortized" claim: if
 the pure decode work scales linearly, the whole-query ratios' sub-linear
 remainder is fixed per-query overhead, not a hidden blow-up.
 
-This measures exactly the per-batch pandas functions the queries run
-(encode + decode round-trip per payload, identical code path to the
-mapInPandas stage) over the REAL documents corpus at sf0.1 and at the 10x
+This measures exactly the per-batch pandas work the queries run
+(``multimodal._feature_batch`` over each query's row function: encode +
+decode round-trip per payload, identical code path to the mapInPandas
+stage) over the REAL documents corpus at sf0.1 and at the 10x
 gen_scale corpus, single-threaded — no Spark session, so the number is the
 per-row codec cost itself.  Appends a "jpeg_decoder_stage" section to
 BENCH_sf1.json.
@@ -27,11 +28,15 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+# query -> (row function, schema) it passes to multimodal.extract_features
 STAGES = {
-    "multimodal_jpeg_dri": "_jpeg_dri_feature_batch",
-    "multimodal_jpeg_progressive": "_jpeg_progressive_feature_batch",
-    "multimodal_jpeg_progressive_color": "_jpeg_progressive_color_feature_batch",
-    "multimodal_jpeg_sampling": "_jpeg_sampling_feature_batch",
+    "multimodal_jpeg_dri": ("_jpeg_dri_row", "DRI_SCHEMA"),
+    "multimodal_jpeg_progressive": ("_jpeg_progressive_row", "PROG_SCHEMA"),
+    "multimodal_jpeg_progressive_color": (
+        "_jpeg_progressive_color_row",
+        "PROG_COLOR_SCHEMA",
+    ),
+    "multimodal_jpeg_sampling": ("_jpeg_sampling_row", "SAMPLING_SCHEMA"),
 }
 
 
@@ -53,12 +58,12 @@ def main() -> None:
         pdf["payload"] = pdf["payload"].map(bytes)
         frames[tag] = pdf
         out["rows"][tag] = len(pdf)
-    for name, fn_name in STAGES.items():
-        fn = getattr(M, fn_name)
+    for name, (row_name, schema_name) in STAGES.items():
+        row_fn, schema = getattr(M, row_name), getattr(M, schema_name)
         secs = {}
         for tag, pdf in frames.items():
             t0 = time.time()
-            fn(pdf)
+            M._feature_batch(pdf, schema, row_fn)
             secs[tag] = round(time.time() - t0, 3)
         out["secs"][name] = secs
         out["ratio"][name] = round(secs["sf1"] / secs["sf0.1"], 2)
