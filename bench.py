@@ -548,9 +548,10 @@ def main() -> None:
         # Wall includes per-QUERY fixed cost (stream start/stop, staged-
         # index fingerprint check, driver read-back) that doesn't scale
         # with rows; triggerExecution is the per-row processing path.
-        # Falls back to output-row count for paths without progress
-        # capture (foreachBatch sinks); the drained memory-sink table
-        # makes that count a cheap local scan, not a stream re-execution.
+        # Both replay drivers (streaming/runner.py: run_to_memory and
+        # run_foreach_batch) record these; the output-row count is the
+        # fallback for a line that records neither, a cheap scan of the
+        # pinned result, not a stream re-execution.
         if name.startswith("streaming_") and last_df is not None and med > 0:
             try:
                 n_rows = getattr(last_df, "stream_input_rows", None)

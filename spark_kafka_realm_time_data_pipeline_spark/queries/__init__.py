@@ -52,6 +52,8 @@ def registry() -> dict[str, QuerySpec]:
     #     outside the window.  The multimodal block re-proves the feature
     #     queries now served by the shared batch builder
     #     (operators/multimodal.py: _feature_batch + one row fn per format);
+    #     the foreachBatch block re-proves the streaming twins now driven
+    #     by streaming/runner.py:run_foreach_batch;
     # (b) the oldest-proof fill (alphabetical within a round).  Additions
     #     displace names from the fill TAIL, never from the stale head.
     front = [
@@ -83,6 +85,16 @@ def registry() -> dict[str, QuerySpec]:
             "multimodal_jpeg_sampling",
             "multimodal_jpeg_stats",
             "multimodal_png_stats",
+            # (a) stale: foreachBatch replay twins (shared replay driver)
+            "streaming_dedup_containment",
+            "streaming_dedup_incremental",
+            "streaming_foreachbatch_topk",
+            "streaming_idempotent_sink",
+            "streaming_mv_update",
+            "streaming_ppl_gate",
+            "streaming_quality_drift",
+            "streaming_sim_topk",
+            "streaming_sim_topk_day2",
             # (b) oldest-proof fill
             "streaming_outer_join",
             "streaming_session_window",
@@ -102,15 +114,6 @@ def registry() -> dict[str, QuerySpec]:
             "ann_pq_codes",
             "anomaly_zscore",
             "avro_pyds_roundtrip",
-            "bloom_prune_join",
-            "boilerplate_strip",
-            "bpe_merge_steps",
-            "cdc_tombstone_merge",
-            "dedup_components",
-            "dedup_embedding",
-            "dedup_incremental",
-            "dedup_keep_corpus",
-            "dedup_minhash_lsh",
         )
         if n in merged  # ordering hint only — a renamed query must not break registry()
     ]

@@ -1,10 +1,12 @@
 """Streaming queries — SURVEY.md §2 rows S1/S2/J1 + §2.5 streaming family.
 
 Every query here EXECUTES a Structured Streaming plan (readStream file
-source → transformations → memory sink, availableNow trigger) and returns
-the materialized result, so the DuckDB oracle checks real streaming
-semantics, not a batch stand-in.  This closes the round-1 gap: the reference
-is 100% Structured Streaming (``sparkpykafkajoin.py:48-54,203-209``) and the
+source → transformations → availableNow trigger) and returns the
+materialized result, so the DuckDB oracle checks real streaming semantics,
+not a batch stand-in.  Most drain into the memory sink
+(``run_to_memory``); the foreachBatch twins, whose hooks run batch-only
+operators, go through ``run_foreach_batch``'s parquet read-back.  This
+closes the round-1 gap: the reference is 100% Structured Streaming (``sparkpykafkajoin.py:48-54,203-209``) and the
 engine previously had no executable streaming path at all.
 
 Oracle notes: with the availableNow trigger the final watermark is
@@ -30,7 +32,12 @@ from ..streaming.pipeline import (
     synth_customer_wire_stream,
     synth_event_wire_stream,
 )
-from ..streaming.runner import run_to_memory
+from ..streaming.runner import (
+    progress_totals,
+    run_foreach_batch,
+    run_to_memory,
+    scratch_dir,
+)
 from . import QuerySpec
 from .reference import _ORA_BIRTHYEAR, _ORA_EMAIL
 from .relational import FMT_DUCK as _FMT_DUCK
@@ -602,20 +609,6 @@ GROUP BY 1, 2, 3
 """
 
 
-def _progress_totals(query) -> tuple[int, float]:
-    """(rows ingested, engine processing seconds) from a finished
-    StreamingQuery's recentProgress — numInputRows summed across triggers
-    and the summed triggerExecution durations, the same denominator
-    Spark's own processedRowsPerSecond uses (and the runner records for
-    memory-sink replays).  Call BEFORE query.stop()."""
-    progress = [p for p in (query.recentProgress or []) if p]
-    input_rows = sum(int(p["numInputRows"]) for p in progress)
-    proc_ms = sum(
-        int(p.get("durationMs", {}).get("triggerExecution", 0)) for p in progress
-    )
-    return input_rows, proc_ms / 1000.0
-
-
 def _carry_stream_metrics(dst: DataFrame, src) -> DataFrame:
     """Forward the runner's ingest/processing metrics onto a DERIVED frame
     so bench's rows/s divides rows PROCESSED by ENGINE time, not by the fn
@@ -625,21 +618,6 @@ def _carry_stream_metrics(dst: DataFrame, src) -> DataFrame:
     if proc:
         dst.stream_processing_secs = proc
     return dst
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Scratch dir for foreachBatch parquet sinks.  Defaults to a local
-    tempdir (correct in local[] mode where executors share the driver's
-    filesystem); set ``SPARK_GRAFT_SCRATCH`` to a shared-FS path (S3A/HDFS/
-    NFS) on a real cluster so executor writes and the driver read-back see
-    the same storage — the same rule checkpoint locations follow."""
-    import tempfile
-    import uuid
-
-    root = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if root:
-        return os.path.join(root, f"{prefix}{uuid.uuid4().hex[:12]}")
-    return tempfile.mkdtemp(prefix=prefix)
 
 
 _INTERVAL_S = 1800  # attribution lookback: click within 30 min before purchase
@@ -833,19 +811,14 @@ def q_streaming_foreachbatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregate; the batch hook ranks and overwrites the serving table, so
     the final replay leaves exactly the top event type per hour on disk.
     Everything inside the hook is a distributed plan — no driver collect."""
-    import shutil
-
     from pyspark.sql import Window as W
-
-    from ..streaming.sinks import foreach_batch_sink
 
     ev = stream_table(spark, sf_dir, "events")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    out_dir = _scratch_dir("feb_topk_")
 
-    def write_topk(batch_df: DataFrame, batch_id: int) -> None:
+    def write_topk(batch_df: DataFrame, out_dir: str) -> None:
         rank_w = W.partitionBy("w").orderBy(F.desc("n_events"), "event_type")
         (
             batch_df.withColumn("rn", F.row_number().over(rank_w))
@@ -855,23 +828,7 @@ def q_streaming_foreachbatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame
             .parquet(out_dir)
         )
 
-    # one try/finally owns the temp dir for the WHOLE run+read, so a stream
-    # error or awaitTermination timeout can't leak it
-    try:
-        query = foreach_batch_sink(agg, write_topk, output_mode="complete")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("foreachBatch top-k replay did not finish in 300s")
-            input_rows, proc_secs = _progress_totals(query)
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_secs > 0:
-            out.stream_processing_secs = proc_secs
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(agg, spark, write_topk, output_mode="complete")
 
 
 ORA_STREAMING_FEB_TOPK = """
@@ -1076,16 +1033,9 @@ def q_streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     makes the result value-identical to the batch twin — and the oracle
     IS the batch twin's SQL.
 
-    Sink-path caveat: the parquet sink uses a driver-local tempdir, which
-    is correct ONLY in local[] mode (executors share the driver's
-    filesystem).  On a real cluster route it to a shared filesystem via
-    ``SPARK_GRAFT_SCRATCH`` (S3/HDFS/NFS path), exactly like checkpoint
-    dirs — otherwise each executor writes to its own local disk and the
-    driver-side read-back sees partial data."""
-    import shutil
-
+    Sink-path caveat: see ``streaming.runner.scratch_dir`` (local[] only
+    unless ``SPARK_GRAFT_SCRATCH`` points at shared storage)."""
     from ..operators import dedup as D
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import staged_base_index
 
     docs = stream_table(spark, sf_dir, "documents")
@@ -1110,9 +1060,8 @@ def q_streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("x.doc_id", "x.text")
     )
     idx = staged_base_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_incdedup_")
 
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def match_batch(batch_df: DataFrame, out_dir: str) -> None:
         matches = D.incremental_near_dup_batch(spark, idx, batch_df, threshold=0.8)
         # repartition(1), NOT coalesce(1): matches are a few-k-row frame and
         # one file per trigger keeps the append sink from accreting tiny
@@ -1122,35 +1071,7 @@ def q_streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         # scan parallel and moves only the final tiny rows.
         matches.repartition(1).write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(delta, match_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "incremental-dedup stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            # engine-reported processing time: sum of per-trigger
-            # triggerExecution durations — the denominator Spark's own
-            # processedRowsPerSecond uses.  Excludes stream start/stop and
-            # the driver-side read-back below, which are per-QUERY setup,
-            # not per-row cost (bench divides by this when present).
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        # ingest throughput for bench rows/s (matches found says nothing
-        # about how many delta docs were processed)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(delta, spark, match_batch)
 
 
 # the streaming ingest dedup is value-identical to the batch twin (one
@@ -1173,47 +1094,22 @@ def q_streaming_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame
     micro-batch, making the result value-identical to the batch twin
     (dedup_containment_incremental) — and the oracle IS that query's SQL.
 
-    Same local[]-only sink caveat as streaming_dedup_incremental: on a
-    cluster route ``SPARK_GRAFT_SCRATCH`` to a shared filesystem."""
-    import shutil
-
+    Sink-path caveat: see ``streaming.runner.scratch_dir`` (local[] only
+    unless ``SPARK_GRAFT_SCRATCH`` points at shared storage)."""
     from ..operators import dedup as D
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import _containment_delta, staged_containment_index
 
     delta = _containment_delta(stream_table(spark, sf_dir, "documents"))
     idx = staged_containment_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_containment_")
 
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def match_batch(batch_df: DataFrame, out_dir: str) -> None:
         matches = D.containment_vs_base_batch(spark, idx, batch_df)
         # repartition(1), NOT coalesce(1): same rationale as the
         # incremental twin — one file per trigger without propagating the
         # 1-partition constraint up the broadcast-probe verify plan
         matches.repartition(1).write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(delta, match_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "containment-ingest stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(delta, spark, match_batch)
 
 
 # value-identical to the batch twin (one availableNow micro-batch), so it
@@ -1238,46 +1134,21 @@ def q_streaming_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically, making the result value-identical to the batch
     twin (sim_incremental_topk) — and the oracle IS that query's SQL.
 
-    Same local[]-only sink caveat as streaming_dedup_containment: on a
-    cluster route ``SPARK_GRAFT_SCRATCH`` to a shared filesystem."""
-    import shutil
-
+    Sink-path caveat: see ``streaming.runner.scratch_dir`` (local[] only
+    unless ``SPARK_GRAFT_SCRATCH`` points at shared storage)."""
     from ..operators import similarity as S
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import _ann_delta, staged_ivf_index
 
     delta = _ann_delta(stream_table(spark, sf_dir, "embeddings"))
     idx = staged_ivf_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_sim_topk_")
 
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def match_batch(batch_df: DataFrame, out_dir: str) -> None:
         matches = S.ann_vs_base_batch(spark, idx, batch_df)
         # repartition(1), NOT coalesce(1): one file per trigger without
         # propagating the 1-partition constraint up the probe plan
         matches.repartition(1).write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(delta, match_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "ANN-ingest stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(delta, spark, match_batch)
 
 
 # value-identical to the batch twin (availableNow drain of a bounded
@@ -1298,17 +1169,13 @@ def q_streaming_sim_topk_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row k=1 probe is split-safe, so the result is value-identical
     to the batch twin (sim_topk_day2) — the oracle IS that query's
     two-day replay SQL."""
-    import shutil
-
     from ..operators import similarity as S
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import _ann_delta2, staged_merged_ivf_index
 
     delta2 = _ann_delta2(stream_table(spark, sf_dir, "embeddings"))
     midx = staged_merged_ivf_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_sim_day2_")
 
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def match_batch(batch_df: DataFrame, out_dir: str) -> None:
         top1 = S.ann_vs_base_batch(spark, midx, batch_df, k=1)
         top1.select(
             "query_id",
@@ -1317,28 +1184,7 @@ def q_streaming_sim_topk_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cosine") >= 0.99).alias("is_dup"),
         ).repartition(1).write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(delta2, match_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "day-2 ANN stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(delta2, spark, match_batch)
 
 
 # shares sim_topk_day2's two-day replay oracle verbatim
@@ -1365,12 +1211,9 @@ def q_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     base state, so unlike the fit-drift twin this funnel is split-safe:
     any micro-batch partitioning of the delta yields the same rows.
 
-    Same local[]-only sink caveat as the other staged-index twins: on a
-    cluster route ``SPARK_GRAFT_SCRATCH`` to a shared filesystem."""
-    import shutil
-
+    Sink-path caveat: see ``streaming.runner.scratch_dir`` (local[] only
+    unless ``SPARK_GRAFT_SCRATCH`` points at shared storage)."""
     from ..operators import ingest as I
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import (
         _ingest_delta,
         staged_base_index,
@@ -1382,34 +1225,12 @@ def q_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     cidx = staged_containment_index(spark, sf_dir)
     hidx = staged_hash_index(spark, sf_dir)
     bidx = staged_base_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_ingest_adm_")
 
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def admit_batch(batch_df: DataFrame, out_dir: str) -> None:
         decisions = I.ingest_admission_batch(spark, cidx, hidx, bidx, batch_df)
         decisions.repartition(1).write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(delta, admit_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "ingest-admission stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(delta, spark, admit_batch)
 
 
 # value-identical to the batch twin (one availableNow drain), so it shares
@@ -1437,10 +1258,7 @@ def q_streaming_ingest_admission_day2(
     any micro-batch partitioning yields the same rows, and the result is
     value-identical to the batch twin (ingest_admission_day2) — the oracle
     IS that query's two-day full-replay SQL."""
-    import shutil
-
     from ..operators import ingest as I
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import (
         _ingest_delta2,
         staged_containment_index,
@@ -1450,34 +1268,12 @@ def q_streaming_ingest_admission_day2(
     delta2 = _ingest_delta2(stream_table(spark, sf_dir, "documents"))
     cidx = staged_containment_index(spark, sf_dir)
     midx = staged_merged_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_ingest_day2_")
 
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def admit_batch(batch_df: DataFrame, out_dir: str) -> None:
         decisions = I.ingest_admission_batch(spark, cidx, midx, midx, batch_df)
         decisions.repartition(1).write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(delta2, admit_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "day-2 admission stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(delta2, spark, admit_batch)
 
 
 def q_streaming_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1504,49 +1300,21 @@ def q_streaming_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger plan (pytest: test_training.test_fit_drift_split_safe).
     This replaces the r17 fail-fast guard that raised on a second
     micro-batch rather than diverge from the oracle."""
-    import os
-    import shutil
-
     from ..operators import training as TRo
     from .llm import _drift_delta, staged_fit_index
 
     fresh = _drift_delta(stream_table(spark, sf_dir, "documents"))
     idx = staged_fit_index(spark, sf_dir)
     base_fit = spark.read.parquet(os.path.join(idx, "fit"))
-    out_dir = _scratch_dir("stream_fit_drift_")
 
-    from ..streaming.sinks import foreach_batch_sink
-
-    def drift_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def drift_batch(batch_df: DataFrame, out_dir: str) -> None:
         TRo.quality_fit_stats(batch_df).repartition(1).write.mode(
             "append"
         ).parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(fresh, drift_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "fit-drift stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        acc = TRo.merge_fit_stats(spark.read.parquet(out_dir))
-        out = TRo.quality_fit_drift_from_stats(base_fit, acc).localCheckpoint(
-            eager=True
-        )
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    parts = run_foreach_batch(fresh, spark, drift_batch)
+    out = TRo.quality_fit_drift_from_stats(base_fit, TRo.merge_fit_stats(parts))
+    return _carry_stream_metrics(out, parts)
 
 
 # value-identical to the batch twin (one availableNow drain), so it shares
@@ -1575,8 +1343,8 @@ def q_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition.  The oracle is the plain batch SQL over the source — any
     duplicate row from the crashed first attempt fails the value hash.
 
-    Same local[]-only sink caveat as streaming_dedup_incremental: on a
-    cluster, route ``SPARK_GRAFT_SCRATCH`` to a shared FS."""
+    Sink-path caveat: see ``streaming.runner.scratch_dir`` (local[] only
+    unless ``SPARK_GRAFT_SCRATCH`` points at shared storage)."""
     import shutil
     import tempfile
 
@@ -1592,7 +1360,7 @@ def q_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor("value").cast("long").alias("value_floor"),
         )
     )
-    out_dir = _scratch_dir("stream_idem_")
+    out_dir = scratch_dir("stream_idem_")
     ckpt = tempfile.mkdtemp(prefix="idem_ckpt_")
     crash_once = {"armed": True}
 
@@ -1632,12 +1400,7 @@ def q_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             if not q2.awaitTermination(300):
                 raise TimeoutError("idempotent-sink restart did not finish in 300s")
-            progress = [p for p in (q2.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
+            input_rows, proc_secs = progress_totals(q2)
         finally:
             q2.stop()
         out = (
@@ -1650,8 +1413,8 @@ def q_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # time (the crashed first attempt is failure-recovery theater, not
         # steady-state throughput)
         out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
+        if proc_secs > 0:
+            out.stream_processing_secs = proc_secs
         return out
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -1727,44 +1490,23 @@ def q_streaming_mv_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet-append + final fold is the sandbox analog, and is
     value-identical under availableNow's deterministic replay).  State is
     bounded by |customers| per batch partial, never by stream length."""
-    import shutil
-
     from ..functions.numeric import dec
-    from ..streaming.sinks import foreach_batch_sink
 
     orders = stream_table(spark, sf_dir, "orders")
-    out_dir = _scratch_dir("stream_mv_")
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def fold_batch(batch_df: DataFrame, out_dir: str) -> None:
         partial = batch_df.groupBy("o_custkey").agg(
             F.sum(dec("o_totalprice")).alias("spend_part"),
             F.count(F.lit(1)).alias("n_part"),
         )
         partial.write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(orders, fold_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("MV-maintenance stream did not finish in 300s")
-            input_rows, proc_secs = _progress_totals(query)
-        finally:
-            query.stop()
-        merged = (
-            spark.read.parquet(out_dir)
-            .groupBy("o_custkey")
-            .agg(
-                F.sum("spend_part").cast("double").alias("total_spent"),
-                F.sum("n_part").cast("bigint").alias("n_orders"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        merged.stream_input_rows = input_rows
-        if proc_secs > 0:
-            merged.stream_processing_secs = proc_secs
-        return merged
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    parts = run_foreach_batch(orders, spark, fold_batch)
+    merged = parts.groupBy("o_custkey").agg(
+        F.sum("spend_part").cast("double").alias("total_spent"),
+        F.sum("n_part").cast("bigint").alias("n_orders"),
+    )
+    return _carry_stream_metrics(merged, parts)
 
 
 def q_streaming_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1978,37 +1720,19 @@ def q_streaming_ppl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the result equals the batch filter's keep-side exactly, and the
     oracle IS the batch SQL restricted to keep.
 
-    Same local[]-only sink caveat as streaming_dedup_incremental: on a
-    cluster the parquet sink dir must be shared storage."""
-    import shutil
-
+    Sink-path caveat: see ``streaming.runner.scratch_dir`` (local[] only
+    unless ``SPARK_GRAFT_SCRATCH`` points at shared storage)."""
     from ..operators.curation import lm_score_docs
-    from ..streaming.sinks import foreach_batch_sink
     from .curation import staged_ppl_model
 
     docs = stream_table(spark, sf_dir, "documents")
     model = staged_ppl_model(spark, sf_dir)
-    out_dir = _scratch_dir("stream_ppl_")
 
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def score_batch(batch_df: DataFrame, out_dir: str) -> None:
         kept = lm_score_docs(batch_df, model).filter("keep").drop("keep")
         kept.write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(docs, score_batch, output_mode="append")
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("ppl-gate stream replay did not finish in 300s")
-            input_rows, proc_secs = _progress_totals(query)
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_secs > 0:
-            out.stream_processing_secs = proc_secs
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(docs, spark, score_batch)
 
 
 def q_streaming_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,13 @@ no-data micro-batches, terminate, and hand back the result as a bounded
 DataFrame.  That is what makes streaming semantics *testable* — the driver's
 DuckDB oracle and pytest both consume the returned table.
 
+``run_foreach_batch`` is the same bounded replay for streams whose sink is
+a BATCH hook: each micro-batch goes through ``write(batch_df, out_dir)``
+(ranking, staged-index probes, partial aggregates — batch-only plans), and
+the hook's parquet output is read back as the result.  It keeps the
+session's own conf: the hooks run batch plans, and the memory-sink
+streaming profile would change them.
+
 At cluster scale the same plans run with a Kafka sink and a processing-time
 trigger (see sinks.py); only the sink/trigger wiring differs — the
 transformation graph is byte-identical (Structured Streaming's unbounded-
@@ -21,6 +28,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -178,4 +186,80 @@ def run_to_memory(
     if proc_ms > 0:
         out.stream_processing_secs = proc_ms / 1000.0
     out.observed_metrics = observed
+    return out
+
+
+def scratch_dir(prefix: str) -> str:
+    """Scratch dir for foreachBatch parquet sinks.  Defaults to a local
+    tempdir, which is correct ONLY in local[] mode (executors share the
+    driver's filesystem).  On a real cluster set ``SPARK_GRAFT_SCRATCH`` to
+    a shared-FS path (S3A/HDFS/NFS) so executor writes and the driver
+    read-back see the same storage — the same rule checkpoint locations
+    follow; otherwise each executor writes to its own local disk and the
+    read-back sees partial data."""
+    root = os.environ.get("SPARK_GRAFT_SCRATCH")
+    if root:
+        return os.path.join(root, f"{prefix}{uuid.uuid4().hex[:12]}")
+    return tempfile.mkdtemp(prefix=prefix)
+
+
+def progress_totals(query) -> tuple[int, float]:
+    """(rows ingested, engine processing seconds) from a finished
+    StreamingQuery's recentProgress — numInputRows summed across triggers
+    and the summed triggerExecution durations, the same denominator
+    Spark's own processedRowsPerSecond uses (and run_to_memory records for
+    memory-sink replays).  Call BEFORE query.stop()."""
+    progress = [p for p in (query.recentProgress or []) if p]
+    input_rows = sum(int(p["numInputRows"]) for p in progress)
+    proc_ms = sum(
+        int(p.get("durationMs", {}).get("triggerExecution", 0)) for p in progress
+    )
+    return input_rows, proc_ms / 1000.0
+
+
+def run_foreach_batch(
+    df: DataFrame,
+    spark: SparkSession,
+    write: Callable[[DataFrame, str], None],
+    output_mode: str = "append",
+) -> DataFrame:
+    """Replay a streaming DataFrame with trigger(availableNow) through a
+    foreachBatch hook and return what the hook wrote.
+
+    ``write(batch_df, out_dir)`` runs once per micro-batch and writes
+    parquet under ``out_dir`` (a ``scratch_dir`` — see its cluster
+    caveat).  After the replay the dir is read back and pinned with an
+    eager localCheckpoint, then the dir and the checkpoint are removed on
+    every exit path.  The result carries ``stream_input_rows`` /
+    ``stream_processing_secs`` (``progress_totals``) so bench's rows/s
+    divides rows INGESTED (matches found say nothing about how many delta
+    rows were processed) by engine time, which excludes stream start/stop
+    and the read-back — per-QUERY setup, not per-row cost."""
+    out_dir = scratch_dir("feb_out_")
+    ckpt = tempfile.mkdtemp(prefix="feb_ckpt_", dir=_REPLAY_CKPT_ROOT)
+    try:
+        query = (
+            df.writeStream.foreachBatch(lambda batch_df, _id: write(batch_df, out_dir))
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        # plain stop() in finally: tools/plan_audit.py reads the last
+        # micro-batch plan by wrapping StreamingQuery.stop
+        try:
+            if not query.awaitTermination(300):
+                raise TimeoutError(
+                    f"{write.__qualname__} replay did not finish in 300s"
+                )
+            input_rows, proc_secs = progress_totals(query)
+        finally:
+            query.stop()
+        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    out.stream_input_rows = input_rows
+    if proc_secs > 0:
+        out.stream_processing_secs = proc_secs
     return out

@@ -66,3 +66,36 @@ def test_kafka_builders_construct():
     assert REDIS_SERVER.topic == "redis-server"
     assert STEDI_EVENTS.topic == "stedi-events"
     assert KafkaSourceConfig(topic="t").starting_offsets == "earliest"
+
+
+def test_run_foreach_batch_reads_back_and_cleans_up(spark, tmp_path, monkeypatch):
+    """The bounded foreachBatch replay returns what the hook wrote, stamps
+    the ingest count, and removes both its scratch dir and its checkpoint —
+    also when the hook raises, whose error must still surface."""
+    import os
+
+    from spark_kafka_realm_time_data_pipeline_spark.streaming import runner
+
+    scratch, ckpts = tmp_path / "scratch", tmp_path / "ckpt"
+    scratch.mkdir()
+    ckpts.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(scratch))
+    monkeypatch.setattr(runner, "_REPLAY_CKPT_ROOT", str(ckpts))
+    ev = stream_table(spark, SF_DIR, "events").select("event_id")
+
+    def write(batch_df, out_dir):
+        batch_df.write.mode("append").parquet(out_dir)
+
+    out = runner.run_foreach_batch(ev, spark, write)
+    expected = spark.read.parquet(f"{SF_DIR}/events.parquet").select("event_id")
+    assert sorted(out.collect()) == sorted(expected.collect())
+    assert out.stream_input_rows == _events_rows(spark)
+    assert os.listdir(scratch) == [] and os.listdir(ckpts) == []
+
+    def failing(batch_df, out_dir):
+        write(batch_df, out_dir)
+        raise RuntimeError("hook failed on purpose")
+
+    with pytest.raises(Exception, match="hook failed on purpose"):
+        runner.run_foreach_batch(ev, spark, failing)
+    assert os.listdir(scratch) == [] and os.listdir(ckpts) == []
