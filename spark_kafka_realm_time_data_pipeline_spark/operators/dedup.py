@@ -1307,6 +1307,12 @@ def substring_dup_spans(corpus: DataFrame) -> DataFrame:
     # keeps every win column, computes the fan-out once, and drops the
     # join outright.  Result-identical: same >1 predicate on the same
     # corpus-wide occurrence counts.
+    # Skew posture: the window buffers every occurrence of one hash in one
+    # task, where the old groupBy pre-aggregated map-side.  A boilerplate
+    # span repeated across most of the corpus therefore lands whole in a
+    # single task (AQE's skew-join split does not apply to windows); the
+    # rows are narrow (doc_id, n_chars, off, h), so this trades that
+    # task's memory for the second frame evaluation the groupBy paid.
     wh = Window.partitionBy("h")
     rep = (
         wins.withColumn("n_occ", F.count(F.lit(1)).over(wh))

@@ -139,26 +139,14 @@ def run_to_memory(
                 f"streaming query {qname} did not finish within "
                 f"{timeout_seconds}s — refusing to return a partial result"
             )
-        # Ingest volume from the engine's own progress metrics.  For an
-        # aggregating stream the OUTPUT row count says nothing about
+        # Ingest volume and processing time from the engine's own progress
+        # metrics, recorded while the StreamingQuery object still exists.
+        # For an aggregating stream the OUTPUT row count says nothing about
         # throughput (a quantile sketch emits 20 rows from millions
-        # ingested), so the bench's rows/s must divide by rows PROCESSED —
-        # recorded here while the StreamingQuery object still exists.
-        input_rows = sum(
-            int(p["numInputRows"]) for p in (query.recentProgress or []) if p
-        )
-        # Engine-reported processing time: the sum of per-trigger
-        # triggerExecution durations — the denominator Spark's own
-        # processedRowsPerSecond uses.  Excludes stream start/stop, the
-        # staged-fixture fingerprint check, and the driver read-back below,
-        # all per-QUERY fixed cost; bench.py divides rows by this when
-        # present, so every runner-driven streaming line reports ingest
-        # throughput over the per-row path, not the availableNow floor.
-        proc_ms = sum(
-            int(p.get("durationMs", {}).get("triggerExecution", 0))
-            for p in (query.recentProgress or [])
-            if p
-        )
+        # ingested), and the summed trigger durations exclude stream
+        # start/stop and the read-back below, all per-QUERY fixed cost —
+        # so bench.py's rows/s is ingest throughput over the per-row path.
+        input_rows, proc_secs = progress_totals(query)
         # Per-batch df.observe() metric rows, keyed by observation name —
         # recorded the same way (the StreamingQuery object dies in finally).
         observed = [
@@ -183,8 +171,8 @@ def run_to_memory(
     # plain Python attributes on the returned (batch) DataFrame — consumed
     # by bench.py's rows/s and the observed-metrics query; harmless elsewhere
     out.stream_input_rows = input_rows
-    if proc_ms > 0:
-        out.stream_processing_secs = proc_ms / 1000.0
+    if proc_secs > 0:
+        out.stream_processing_secs = proc_secs
     out.observed_metrics = observed
     return out
 

@@ -1,130 +1,104 @@
-"""The mechanical plan/proof-freshness gate (VERDICT r15 item 2).
+"""The proof-freshness gate (VERDICT r15 item 2).
 
-Two rounds running, a query's code changed AFTER its newest driver proof
-while the query sat outside the correctness window: r14 changed the shared
-`containment_pairs` pipeline but left `dedup_containment` /
-`dedup_keep_containment` (newest proof r13) out of the r14 window; r15
-rewrote the jpeg decoder module (+941 lines) while `multimodal_jpeg_stats`
-/ `multimodal_jpeg_color` (newest proofs r13/r14) sat outside the r15
-window.  `tests/test_registry.py` enforces proven-or-in-window but not
-proof-newer-than-the-code — this file closes that hole:
+Two rounds running, a query's code changed AFTER its newest proof: r14
+changed the shared `containment_pairs` pipeline while `dedup_containment`
+/ `dedup_keep_containment` were last proven at r13; r15 rewrote the jpeg
+decoder module (+941 lines) while `multimodal_jpeg_stats` /
+`multimodal_jpeg_color` were last proven at r13/r14.  This file closes
+that hole:
 
-- PROOF_LEDGER.json records each query's code-closure fingerprint
-  (tools/closure_fp.py) and normalized plan fingerprint
-  (tools/plan_audit.py) at its newest driver proof;
-- `test_every_changed_query_is_in_the_window` recomputes the closure
-  fingerprints live and requires any mismatch to be inside the current
-  window (PLAN_AUDIT.json supplies the plan side, itself pinned to the
-  working tree by test_plan_audit.py);
+- `tools/check.py` records each green query's code-closure fingerprint
+  (tools/closure_fp.py) and corpus in PROOF_LEDGER.json;
+- `test_every_query_is_proven_at_its_current_code` recomputes the closure
+  fingerprints live and requires every registered query to have a
+  recorded green proof of that exact code on both corpora;
 - `test_gate_catches_the_r14_and_r15_incidents` replays both prior
   incidents' exact shapes through the pure checker and asserts each would
   have failed CI.
 """
 
-import json
 import os
 import sys
-
-import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "tools"))
 
-from proof_ledger import plan_drift, stale_names  # noqa: E402
-
-WINDOW = 50  # the driver checks the first ~50 registry names
+from proof_ledger import PROOF_SFS, load, record, stale_names  # noqa: E402
 
 
-def _ledger():
-    with open(os.path.join(ROOT, "PROOF_LEDGER.json")) as fh:
-        return json.load(fh)["entries"]
+def test_every_query_is_proven_at_its_current_code():
+    """Every registered query whose CURRENT code-closure fingerprint
+    (salted with session.py) has no green tools/check.py proof on every
+    corpus in PROOF_SFS fails the gate.  Fix on failure: run the printed
+    commands (one after the other); after a session.py change every
+    fingerprint flips, so re-prove the full registry (no name filter)."""
+    from closure_fp import registry_fingerprints
 
-
-def test_every_changed_query_is_in_the_window():
-    """Any registered query whose CURRENT code-closure fingerprint
-    (salted with session.py) differs from its at-proof fingerprint in
-    PROOF_LEDGER.json (or that has no ledger entry) must sit inside the
-    driver window.  Fix on failure: rotate the named queries to the
-    window front in queries/__init__.py, or — at round start, before any
-    source edit — run `python tools/proof_ledger.py update` to absorb
-    fresh driver proofs; after a session.py change, re-prove the full
-    registry (tools/check.py, no filter) and re-seed with that basis.
-    Plan-fingerprint drift is surfaced as a warning, not a failure —
-    plan strings carry measured planner nondeterminism (see
-    proof_ledger.stale_names)."""
-    import warnings
-
-    from proof_ledger import current_fingerprints
-
-    from spark_kafka_realm_time_data_pipeline_spark.queries import registry
-
-    closure_fps, plan_fps = current_fingerprints()
-    window = list(registry())[:WINDOW]
-    violations = stale_names(_ledger(), closure_fps, window)
-    assert not violations, (
-        "changed-since-proof queries outside the driver window: "
-        f"{violations}"
-    )
-    drift = plan_drift(_ledger(), plan_fps)
-    if drift:
-        warnings.warn(
-            f"advisory plan-fingerprint drift (inspect, not a gate): {drift}",
-            stacklevel=1,
+    stale = stale_names(load(), registry_fingerprints())
+    names = " ".join(sorted(stale))
+    assert not stale, (
+        f"{len(stale)} queries without a green proof of their current code; "
+        "re-prove them, one run after the other:\n"
+        + "\n".join(
+            f"  python tools/check.py $TESTDATA/{sf} {names}" for sf in PROOF_SFS
         )
+    )
 
 
 def test_gate_catches_the_r14_and_r15_incidents():
     """Replay of the two shipped staleness incidents:
 
     r14: `containment_pairs` (operators/dedup.py) gained a rank-stage
-    count-window and a verify semi-filter — a CODE and PLAN change for
-    `dedup_containment`, whose newest proof (r13) predated it — and the
-    r14 window did not contain the query.
+    count-window and a verify semi-filter — a CODE change for
+    `dedup_containment`, whose newest proof (r13) predated it.
 
     r15: the jpeg decoder module gained DRI/SOF2 branches — a CODE change
     reachable from `multimodal_jpeg_stats`'s mapInPandas batch whose PLAN
-    stayed byte-identical — and the r15 window did not contain the query.
+    stayed byte-identical, which is why the gate hashes the code closure
+    and not the plan.
 
-    Both must be flagged; the r15 shape specifically must be caught with
-    an UNCHANGED plan fingerprint, which is why the gate hashes the code
-    closure and not just the plan."""
+    Both must be flagged, as must a never-proven query and a query proven
+    on only one corpus."""
+    both = list(PROOF_SFS)
     ledger = {
-        "dedup_containment": {
-            "round": 13, "closure_fp": "aaaa", "plan_fp": "pppp",
-        },
-        "multimodal_jpeg_stats": {
-            "round": 13, "closure_fp": "cccc", "plan_fp": "qqqq",
-        },
-        "untouched_query": {
-            "round": 13, "closure_fp": "ffff", "plan_fp": "rrrr",
-        },
+        "dedup_containment": {"closure_fp": "aaaa", "sf": both},
+        "multimodal_jpeg_stats": {"closure_fp": "cccc", "sf": both},
+        "untouched_query": {"closure_fp": "ffff", "sf": both},
+        "half_proven": {"closure_fp": "eeee", "sf": ["sf0.001"]},
     }
     current_closure = {
         "dedup_containment": "aaa2",     # r14: pipeline code changed
         "multimodal_jpeg_stats": "ccc2",  # r15: decoder module changed
         "untouched_query": "ffff",
+        "half_proven": "eeee",
+        "brand_new": "zzzz",
     }
-    window = ["untouched_query", "some_other_query"]  # incidents outside
-    flagged = stale_names(ledger, current_closure, window)
-    assert flagged == {
+    assert stale_names(ledger, current_closure) == {
         "dedup_containment": "code closure changed since proof",
         "multimodal_jpeg_stats": "code closure changed since proof",
+        "half_proven": "not proven on sf0.01",
+        "brand_new": "no recorded proof",
     }
-    # in-window incidents are tolerated (the window IS the re-proof queue)
-    assert stale_names(
-        ledger, current_closure,
-        window + ["dedup_containment", "multimodal_jpeg_stats"],
-    ) == {}
-    # a never-proven query must be in the window
-    assert stale_names(
-        ledger, {"brand_new": "zzzz"}, window
-    ) == {"brand_new": "no recorded proof"}
-    # plan drift is surfaced separately as an advisory (r14's plan change
-    # also changed code, so enforcement still catches it via closure)
-    assert plan_drift(ledger, {"dedup_containment": "ppp2"}) == {
-        "dedup_containment": "pppp -> ppp2"
+
+
+def test_record_resets_on_new_code_and_accumulates_corpora():
+    """A proof of new code replaces the entry (its older corpora proved
+    other code); a proof of the same code adds the corpus; names the run
+    did not prove are left alone, and the input ledger is not mutated."""
+    ledger = {
+        "changed": {"closure_fp": "old", "sf": ["sf0.001", "sf0.01"]},
+        "same": {"closure_fp": "keep", "sf": ["sf0.001"]},
+        "other": {"closure_fp": "x", "sf": ["sf0.01"]},
     }
-    assert plan_drift(ledger, {"untouched_query": "rrrr"}) == {}
+    fps = {"changed": "new", "same": "keep", "other": "y", "fresh": "f"}
+    out = record(ledger, ["changed", "same", "fresh"], fps, "sf0.01")
+    assert out == {
+        "changed": {"closure_fp": "new", "sf": ["sf0.01"]},
+        "same": {"closure_fp": "keep", "sf": ["sf0.001", "sf0.01"]},
+        "other": {"closure_fp": "x", "sf": ["sf0.01"]},
+        "fresh": {"closure_fp": "f", "sf": ["sf0.01"]},
+    }
+    assert ledger["same"]["sf"] == ["sf0.001"]
 
 
 def test_session_config_change_flips_every_fingerprint():
@@ -132,8 +106,8 @@ def test_session_config_change_flips_every_fingerprint():
     state-store provider) without appearing in any code closure — the
     one plan-changes-without-code-change vector this repo has.  The
     registry fingerprints are salted with session.py's source, so a
-    config edit flips them all and forces the documented full-re-proof
-    protocol (check.py full run + ledger re-seed)."""
+    config edit flips them all and forces a full-registry check.py re-proof
+    on both corpora."""
     from closure_fp import closure_fingerprint
 
     from spark_kafka_realm_time_data_pipeline_spark.queries import registry

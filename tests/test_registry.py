@@ -45,40 +45,6 @@ def test_streaming_family_registered():
         assert name in qs, name
 
 
-def test_every_oracled_query_is_driver_proven_or_in_window():
-    """Rotation-era safety net: the driver only checks the first ~50 registry
-    entries per round, and queries/__init__.py rotates families through that
-    window so the union of rounds proves everything.  A rename (or a rotation
-    mistake) would silently drop a query's green row — this asserts every
-    oracled entry either already has a green row in some CORRECTNESS_r*.json
-    or sits inside the current window (so it gets one this round)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proven: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        with open(path) as f:
-            rows = json.load(f)
-        proven |= {
-            name
-            for name, r in rows.items()
-            if r.get("rows_match") and r.get("schema_match") and r.get("hash_match")
-        }
-    reg = registry()
-    window = set(list(reg)[:50])
-    unproven = [
-        name
-        for name, spec in reg.items()
-        if spec.oracle is not None and name not in proven and name not in window
-    ]
-    assert not unproven, (
-        f"oracled queries with no green driver row and outside the next "
-        f"driver window (rotate them forward in queries/__init__.py): {unproven}"
-    )
-
-
 def test_proven_names_still_exist():
     """Every query the driver has ever proven must still exist under the same
     name — a rename would orphan its green row and shrink real coverage."""

@@ -3,6 +3,8 @@ console and foreachBatch paths execute for real; the Kafka builders are
 validated structurally (they construct without a broker — failure happens
 only at connect time, which is the production path)."""
 
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,11 +24,12 @@ def _events_rows(spark) -> int:
     return spark.read.parquet(f"{SF_DIR}/events.parquet").count()
 
 
-def test_console_sink_runs(spark):
+def test_console_sink_runs(spark, tmp_path, monkeypatch):
     """K2: the reference's console sink (sparkpyrediskafkastreamtoconsole.py:154)
     over a bounded replay — must process all rows and terminate.  (The
     printed table goes to the JVM's stdout, echoed asynchronously — assert
     on query progress, which is the sink's own accounting.)"""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # sink's checkpoint dir
     ev = stream_table(spark, SF_DIR, "events").select("event_id", "event_type")
     q = console_sink(ev, num_rows=5)
     q.awaitTermination(120)
@@ -37,9 +40,10 @@ def test_console_sink_runs(spark):
     assert sum(p["numInputRows"] for p in progress) == _events_rows(spark)
 
 
-def test_foreach_batch_sink_collects(spark):
+def test_foreach_batch_sink_collects(spark, tmp_path, monkeypatch):
     """foreachBatch: arbitrary batch sink — counts per micro-batch land in
     the driver-side accumulator list."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # sink's checkpoint dir
     seen = []
     ev = stream_table(spark, SF_DIR, "events").select("event_id")
 

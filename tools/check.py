@@ -4,6 +4,10 @@ Runs every __spark_entry__.queries() entry at the given SF and compares to
 oracle_sql() via DuckDB: row count, column names, and an order-insensitive
 value hash (columns sorted by name, rows sorted, values stringified).
 
+Every query that passes (or runs, when it has no oracle) is recorded in
+PROOF_LEDGER.json under its code-closure fingerprint and the corpus name
+(tools/proof_ledger.py), which tests/test_proof_freshness.py checks.
+
 Usage: python tools/check.py [sf_dir] [query ...]
 """
 
@@ -101,6 +105,9 @@ def type_parity_problems(rows, cols, ora_rows, ora_cols):
 
 
 def main():
+    import proof_ledger
+    from closure_fp import registry_fingerprints
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
@@ -119,7 +126,11 @@ def main():
     if unknown:
         print(f"ERROR: unknown query name(s): {sorted(unknown)}")
         return 2
+    # fingerprint the code before running it: a source edit made during the
+    # run must not be credited with this run's proofs
+    closure_fps = registry_fingerprints()
 
+    proven = []
     n_pass = n_fail = n_rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -137,6 +148,7 @@ def main():
         dt = time.time() - t0
         if name not in oracles:
             print(f"rows  {name}: {len(rows)} rows ({dt:.1f}s) [rows-only]")
+            proven.append(name)
             n_rows_only += 1
             continue
         try:
@@ -164,7 +176,13 @@ def main():
             n_fail += 1
         else:
             print(f"pass  {name} ({len(rows)} rows, {dt:.1f}s)")
+            proven.append(name)
             n_pass += 1
+    # re-read right before writing: the ledger may have changed during the run
+    ledger = proof_ledger.record(
+        proof_ledger.load(), proven, closure_fps, os.path.basename(os.path.normpath(sf_dir))
+    )
+    proof_ledger.save(ledger)
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     return 1 if n_fail else 0
 

@@ -1,8 +1,8 @@
 """Per-query CODE-CLOSURE fingerprints for the proof-freshness gate.
 
 Two staleness incidents in a row (r14 containment pair, r15 jpeg pair)
-shipped because `tests/test_registry.py` enforces proven-or-in-window but
-not proof-newer-than-the-code.  The r15 incident is the instructive one:
+shipped because nothing checked that a query's proof was newer than its
+code.  The r15 incident is the instructive one:
 the queries' physical plans were IDENTICAL before and after the change —
 the churn was inside the Python decoder the mapInPandas batch calls — so
 a plan fingerprint alone cannot catch that class.  This module fingerprints
@@ -10,8 +10,8 @@ the code itself: the transitive closure of package functions, classes,
 modules-referenced-attributes, and module-level constants reachable from a
 query's registry fn, plus its DuckDB oracle SQL.  Any edit to any source
 the query can execute (or to the oracle it is compared against) flips the
-fingerprint; `tests/test_proof_freshness.py` then requires the query to be
-inside the driver's correctness window until a new proof lands.
+fingerprint; `tests/test_proof_freshness.py` then fails until
+`tools/check.py` records a green proof of the new code on both corpora.
 
 The walk is static-ish: it scans code objects' ``co_names`` / closure
 cells / defaults and resolves them against the function's globals and
@@ -26,9 +26,10 @@ refactor slip past two streaming twins' fingerprints before this fix.  It
 over-approximates — a name that happens to exist on a referenced module is
 included even if never called — which errs toward flagging, never toward
 missing a change.  Known blind spots, documented rather than hidden:
-purely dynamic dispatch (getattr with a computed string) and session-level
-config (`session.py` — queries never reference it; covered by the PLAN
-fingerprint in PLAN_AUDIT.json, which config changes do flip).
+purely dynamic dispatch (getattr with a computed string) and functions
+held in dicts or tuples, which the walk does not enter.  Session-level
+config (`session.py`) is reached by no query; `registry_fingerprints`
+salts every fingerprint with its source (`session_salt`) instead.
 """
 
 from __future__ import annotations
@@ -116,8 +117,8 @@ def closure_fingerprint(
     ``salt`` folds in context outside any query's reach — the registry
     pass salts with session.py's source, so a session-config change
     (which can re-plan every query without touching query-reachable
-    code) flips every fingerprint and forces the full re-proof protocol
-    (tools/proof_ledger.py seed after a green full-registry check).
+    code) flips every fingerprint and forces a full-registry
+    tools/check.py re-proof on both corpora.
     Deterministic: all collected items are sorted before hashing."""
     import dis
 

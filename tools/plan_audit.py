@@ -50,16 +50,16 @@ built a second time, so one-time index staging (fingerprint-keyed, cached
 on scratch) drops out and the captured stage plans are the steady
 per-batch work a production trigger repeats.  The plan ``fingerprint``
 stays final-plan-only (stage plans can legitimately vary with scratch
-warmth; the proof-freshness gate treats plan fps as advisory anyway).
+warmth).
 
 Output: PLAN_AUDIT.json — {"queries": {name: {counts, flags,
 fingerprint}}, "flagged": {flag: [names]}, "skipped": [names]}.
 tests/test_plan_audit.py pins the flagged sets against the reviewed
 allowlists so a re-run that surfaces a NEW cartesian/row-UDF/BNLJ fails
 CI, while count drift does not.  The per-query ``fingerprint`` is a
-normalized plan-shape hash consumed by the proof-freshness gate
-(tools/proof_ledger.py + tests/test_proof_freshness.py): a query whose
-plan changed since its newest driver proof must re-enter the window.
+normalized plan-shape hash kept for diffing two audits; no gate reads it
+(the proof-freshness gate keys on code-closure fingerprints,
+tools/closure_fp.py).
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """

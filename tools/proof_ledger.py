@@ -1,233 +1,80 @@
-"""PROOF_LEDGER.json — per-query fingerprints AT PROOF TIME, and the pure
-staleness check `tests/test_proof_freshness.py` enforces.
+"""PROOF_LEDGER.json — the query proofs `tools/check.py` records, and the
+pure staleness check `tests/test_proof_freshness.py` enforces.
 
-The ledger maps query name -> {round, closure_fp, plan_fp}: the newest
-driver CORRECTNESS round that proved the query green, and the code-closure
-fingerprint (tools/closure_fp.py) + normalized plan fingerprint
-(tools/plan_audit.py, PLAN_AUDIT.json) the query had at that tree.  A query
-whose CURRENT fingerprint differs from its at-proof fingerprint has changed
-since it was last proven and MUST sit inside the driver's correctness
-window (the first ~50 registry names) until a new proof lands — the
-mechanical version of the rotation discipline that was violated by hand in
-r14 (containment pair) and r15 (jpeg pair).
+The ledger maps query name -> {closure_fp, sf}: the code-closure
+fingerprint (tools/closure_fp.py) the query had when `tools/check.py`
+last proved it green (hash-equal to its DuckDB oracle, or rows-only for
+the one query without an oracle), and the corpora it was proved on at
+that fingerprint.  A query is stale — and the gate fails — when it has no
+entry, when its current fingerprint differs from the recorded one, or
+when the recorded proofs do not cover every corpus in PROOF_SFS.
 
-Round workflow:
-  python tools/proof_ledger.py update     # at ROUND START, before any
-                                          # source edit: absorb the newest
-                                          # CORRECTNESS_r*.json rows at the
-                                          # tree the driver proved
-  python tools/proof_ledger.py seed       # bootstrap/re-seed EVERY oracled
-                                          # name at the current tree; only
-                                          # legitimate immediately after a
-                                          # full-registry tools/check.py
-                                          # green run at this tree — the
-                                          # command refuses without
-                                          # --basis "<note>" documenting it
+Re-prove the stale names (printed by ``python tools/proof_ledger.py``)
+on both corpora, one run after the other:
 
-`update` is safe because the round-start tree is byte-identical to the
-tree the driver proved (the driver commits only artifacts).  Mid-round
-proofs (tools/check.py runs) do NOT update the ledger — only driver rows
-count, matching the judge's standard of evidence.
+  python tools/check.py $TESTDATA/sf0.001 <name ...>
+  python tools/check.py $TESTDATA/sf0.01 <name ...>
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
-import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
 LEDGER = os.path.join(ROOT, "PROOF_LEDGER.json")
 
-
-def newest_green_rounds() -> dict[str, int]:
-    """name -> newest round with a hash-green (or rows-only-green) driver
-    CORRECTNESS row."""
-    newest: dict[str, int] = {}
-    for p in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        with open(p) as fh:
-            rows = json.load(fh)
-        for name, row in rows.items():
-            if not isinstance(row, dict) or row.get("err"):
-                continue
-            ok = row.get("hash_match") or (
-                row.get("rows_match") and row.get("hash_match") is None
-            )
-            if ok:
-                newest[name] = max(newest.get(name, 0), rnd)
-    return newest
+PROOF_SFS = ("sf0.001", "sf0.01")
 
 
-def current_fingerprints() -> tuple[dict[str, str], dict[str, str]]:
-    """(closure_fps, plan_fps) for every registered query at this tree.
-    plan_fps come from the committed PLAN_AUDIT.json — valid because
-    tests/test_plan_audit.py pins that artifact to the working tree's
-    source hash; streaming/executing queries have no plan row."""
-    from closure_fp import registry_fingerprints
-
-    closure = registry_fingerprints()
-    plan: dict[str, str] = {}
-    audit_path = os.path.join(ROOT, "PLAN_AUDIT.json")
-    if os.path.exists(audit_path):
-        with open(audit_path) as fh:
-            audit = json.load(fh)
-        for name, row in audit.get("queries", {}).items():
-            if "fingerprint" in row:
-                plan[name] = row["fingerprint"]
-    return closure, plan
-
-
-def stale_names(
-    ledger: dict,
-    closure_fps: dict[str, str],
-    window: list[str] | set[str],
-) -> dict[str, str]:
-    """The enforcement core (pure, fixture-testable): every query whose
-    current CODE-CLOSURE fingerprint differs from its at-proof
-    fingerprint — or that has no ledger entry at all — must be in
-    `window`.  Returns {name: reason} for violators OUTSIDE the window.
-
-    Enforcement is deliberately on the closure fingerprint only.  It
-    catches every code-reachable change (both historical incidents) and,
-    via the session.py salt, config-driven re-plans.  The PLAN
-    fingerprint is recorded and surfaced as an ADVISORY (plan_drift)
-    because plan STRINGS carry measured planner nondeterminism that no
-    normalization can cheaply canonicalize — e.g. Catalyst's
-    RewriteDistinctAggregates assigns the gid groups of multiple
-    count_distincts in session-dependent order, flipping
-    contamination_overlap's Expand/aggregate key order between identical
-    runs (observed r16, two back-to-back same-tree audits) — and a gate
-    that can flake on unchanged code trains people to override it."""
-    window = set(window)
-    out: dict[str, str] = {}
-    for name, cfp in closure_fps.items():
-        ent = ledger.get(name)
-        reason = None
-        if ent is None:
-            reason = "no recorded proof"
-        elif ent.get("closure_fp") != cfp:
-            reason = "code closure changed since proof"
-        if reason and name not in window:
-            out[name] = reason
-    return out
-
-
-def plan_drift(ledger: dict, plan_fps: dict[str, str]) -> dict[str, str]:
-    """Advisory: queries whose recorded plan fingerprint differs from the
-    committed PLAN_AUDIT.json's.  Surfaced as a pytest warning, not a
-    failure (see stale_names for why)."""
-    out: dict[str, str] = {}
-    for name, pfp in plan_fps.items():
-        ent = ledger.get(name)
-        if ent and ent.get("plan_fp") and ent["plan_fp"] != pfp:
-            out[name] = f"{ent['plan_fp']} -> {pfp}"
-    return out
-
-
-def _load_ledger() -> dict:
+def load() -> dict:
     if os.path.exists(LEDGER):
         with open(LEDGER) as fh:
             return json.load(fh)
-    return {"entries": {}, "meta": {}}
+    return {}
 
 
-def _save(ledger: dict) -> None:
-    with open(LEDGER, "w") as fh:
+def save(ledger: dict) -> None:
+    """Replace the file atomically: a killed run leaves the old ledger."""
+    fd, tmp = tempfile.mkstemp(dir=ROOT, prefix=".proof_ledger_", suffix=".json")
+    with os.fdopen(fd, "w") as fh:
         json.dump(ledger, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    os.replace(tmp, LEDGER)
 
 
-def cmd_update() -> None:
-    ledger = _load_ledger()
-    newest = newest_green_rounds()
-    closure, plan = current_fingerprints()
-    entries = ledger["entries"]
-    n = 0
-    for name, rnd in newest.items():
-        if name not in closure:
-            continue  # renamed/retired query
-        ent = entries.get(name)
-        if ent is None or ent["round"] < rnd:
-            entries[name] = {
-                "round": rnd,
-                "closure_fp": closure[name],
-                "plan_fp": plan.get(name),
-            }
-            n += 1
-    _save(ledger)
-    print(f"updated {n} entries ({len(entries)} total)")
+def record(ledger: dict, passed, closure_fps: dict[str, str], sf: str) -> dict:
+    """Fold one green run into ``ledger`` (returned, not mutated).  A proof
+    at a new fingerprint replaces the entry — proofs of older code say
+    nothing about this code — and a proof at the same fingerprint adds
+    ``sf`` to the corpora already covered."""
+    out = dict(ledger)
+    for name in passed:
+        fp = closure_fps[name]
+        ent = ledger.get(name)
+        sfs = set(ent["sf"]) if ent and ent["closure_fp"] == fp else set()
+        out[name] = {"closure_fp": fp, "sf": sorted(sfs | {sf})}
+    return out
 
 
-def cmd_seed(basis: str) -> None:
-    newest = newest_green_rounds()
-    closure, plan = current_fingerprints()
-    entries = {
-        name: {
-            "round": newest.get(name, 0),
-            "closure_fp": closure[name],
-            "plan_fp": plan.get(name),
-        }
-        for name in closure
-    }
-    _save({"entries": entries, "meta": {"seed_basis": basis}})
-    print(f"seeded {len(entries)} entries")
-
-
-def cmd_queue(size: int = 50) -> None:
-    """Emit the suggested driver window for the next round — the
-    mechanical replacement for hand-writing the rotation (the r16
-    COVERAGE row had to correct a hand-counted tally): first every
-    STALE name (fingerprint differs from its at-proof value, or no
-    proof at all — these MUST be in the window), then the remaining
-    slots filled oldest-proof-first (alphabetical within a round).
-    Copy the output into queries/__init__.py's `front` tuple and
-    re-order the stale head by theme as the comment block explains."""
-    ledger = _load_ledger()["entries"]
-    closure, _ = current_fingerprints()
-    stale = sorted(
-        n
-        for n, fp in closure.items()
-        if n not in ledger or ledger[n].get("closure_fp") != fp
-    )
-    rest = sorted(
-        (ledger[n]["round"], n) for n in closure if n not in set(stale)
-    )
-    fill = [n for _, n in rest][: max(0, size - len(stale))]
-    print(f"# stale ({len(stale)}) — MUST be in the window:")
-    for n in stale:
-        print(f"  {n}")
-    print(f"# fill oldest-proof-first ({len(fill)}):")
-    for n in fill:
-        print(f"  {n}  (r{ledger[n]['round']})")
-
-
-def main() -> None:
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "update"
-    if cmd == "update":
-        cmd_update()
-    elif cmd == "queue":
-        cmd_queue(int(sys.argv[2]) if len(sys.argv) > 2 else 50)
-    elif cmd == "seed":
-        if "--basis" not in sys.argv:
-            sys.exit(
-                "seed rewrites every at-proof fingerprint to the CURRENT "
-                "tree; that is only honest straight after a full-registry "
-                "tools/check.py green run here.  Re-run with --basis "
-                '"<when/what proved this tree>".'
-            )
-        basis = sys.argv[sys.argv.index("--basis") + 1]
-        cmd_seed(basis)
-    else:
-        sys.exit(
-            f"unknown command {cmd!r} (use: update | queue [size] | "
-            "seed --basis ...)"
-        )
+def stale_names(ledger: dict, closure_fps: dict[str, str]) -> dict[str, str]:
+    """{name: reason} for every query without a green proof of its
+    current code on every corpus in PROOF_SFS."""
+    out: dict[str, str] = {}
+    for name, fp in closure_fps.items():
+        ent = ledger.get(name)
+        if ent is None:
+            out[name] = "no recorded proof"
+        elif ent["closure_fp"] != fp:
+            out[name] = "code closure changed since proof"
+        elif missing := sorted(set(PROOF_SFS) - set(ent["sf"])):
+            out[name] = f"not proven on {', '.join(missing)}"
+    return out
 
 
 if __name__ == "__main__":
-    main()
+    from closure_fp import registry_fingerprints
+
+    for name, reason in sorted(stale_names(load(), registry_fingerprints()).items()):
+        print(f"{name}: {reason}")
